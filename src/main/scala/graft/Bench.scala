@@ -71,10 +71,13 @@ object Bench {
   private def fmt(v: Double, prec: Int): String =
     s"%.${prec}f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** The most-expensive-first subset of `pairs` whose rendered map
-    * keeps the final stdout line within `budget` chars (`overhead` =
-    * the line's length with an empty map). Pure so BenchLineSpec pins
-    * the budget behavior; see main for why the budget exists.
+  /** A greedy fill of `pairs`, most expensive first, that keeps the
+    * final stdout line within `budget` chars (`overhead` = the line's
+    * length with an empty map). A pair that does not fit is skipped
+    * and the fill goes on, so a cheaper key with a shorter name may
+    * still follow: the map leans to expensive keys but is not a
+    * contiguous top-N. Pure so BenchLineSpec pins the budget
+    * behavior; see main for why the budget exists.
     */
   private[graft] def inlineTopPairs(pairs: Seq[(String, Double)],
       overhead: Int, budget: Int, prec: Int = 2): String = {
@@ -109,6 +112,58 @@ object Bench {
     chunks.toSeq.zipWithIndex.map { case (c, i) =>
       s"""{"queries_chunk":${i + 1},"of":${chunks.size},"queries":{${c.mkString(",")}}}"""
     }
+  }
+
+  /** The per-query map of a previously-committed artifact `txt`, or
+    * empty when it is no valid self-comparison baseline for a run at
+    * `sfDir` on `cpus` cores. Pure so BenchBaselineSpec pins the
+    * guards.
+    */
+  private[graft] def committedBaseline(txt: String, sfDir: String,
+      cpus: String): Map[String, Double] = {
+    // SF guard: a committed artifact from a DIFFERENT scale factor
+    // (a dev run at sf0.01 landing in bench_full.json) would make
+    // every key look 3x-inflated and recheck the whole suite —
+    // only a same-SF map is a valid self-comparison baseline.
+    // Compare NORMALIZED paths, not raw substrings: a relative or
+    // trailing-slash sfDir spelling must not silently disable the
+    // stall-recheck safety net.
+    val committedSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt)
+      .map(_.group(1))
+    def canon(p: String) = java.nio.file.Paths.get(p)
+      .toAbsolutePath.normalize.toString
+    // CPUS guard (same failure class as the SF clobber): per-key times
+    // of a sweep on another core count are no baseline for this one,
+    // and the regime stamp would read the core difference as host
+    // load. A map without the field is refused too: its core count is
+    // unknown, which is how an 8-core map once replaced a 32-core one.
+    val committedCpus = """"cpus":"([^"]+)"""".r.findFirstMatchIn(txt)
+      .map(_.group(1))
+    // REGIME guard (the r14 lesson, same failure class as the r12
+    // SF clobber): a committed map recorded under host load — its
+    // own regime_ratio stamp outside the documented idle band
+    // (<= 1.1) — would inflate the vs_committed baseline ~3x and
+    // neuter the >3x stall tripwire. Refuse to compare against it;
+    // a map with no stamp (pre-r12 format) is adopted as before.
+    val committedRegime =
+      """"regime_ratio":([0-9]+\.[0-9]+)""".r.findFirstMatchIn(txt)
+        .map(_.group(1).toDouble)
+    if (!committedSf.exists(s => canon(s) == canon(sfDir))) Map.empty
+    else if (!committedCpus.contains(cpus)) {
+      System.err.println("bench: committed map's cpus " +
+        s"${committedCpus.getOrElse("(absent)")} differs from this run's " +
+        s"$cpus — ignoring it as a vs_committed baseline")
+      Map.empty
+    }
+    else if (committedRegime.exists(_ > 1.1)) {
+      System.err.println("bench: committed map's regime_ratio " +
+        s"${committedRegime.get} is outside the idle band (>1.1) — " +
+        "ignoring it as a vs_committed baseline; re-land an idle sweep")
+      Map.empty
+    }
+    else """"([a-z0-9_]+)\\?":([0-9]+\.[0-9]+)""".r.findAllMatchIn(txt)
+      .map(m => m.group(1) -> m.group(2).toDouble)
+      .filter { case (k, _) => SparkEntry.queries.contains(k) }.toMap
   }
 
   def main(args: Array[String]): Unit = {
@@ -211,40 +266,10 @@ object Bench {
     // the anchor (the map keys are query names, filtered to known ones)
     val committedPath =
       sys.env.getOrElse("SPARK_GRAFT_COMMITTED", "bench_full.json")
-    val committed: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(committedPath)), "UTF-8")
-      // SF guard: a committed artifact from a DIFFERENT scale factor
-      // (a dev run at sf0.01 landing in bench_full.json) would make
-      // every key look 3x-inflated and recheck the whole suite —
-      // only a same-SF map is a valid self-comparison baseline.
-      // Compare NORMALIZED paths, not raw substrings: a relative or
-      // trailing-slash sfDir spelling must not silently disable the
-      // stall-recheck safety net.
-      val committedSf = """"sf":"([^"]+)"""".r.findFirstMatchIn(txt)
-        .map(_.group(1))
-      def canon(p: String) = java.nio.file.Paths.get(p)
-        .toAbsolutePath.normalize.toString
-      // REGIME guard (the r14 lesson, same failure class as the r12
-      // SF clobber): a committed map recorded under host load — its
-      // own regime_ratio stamp outside the documented idle band
-      // (<= 1.1) — would inflate the vs_committed baseline ~3x and
-      // neuter the >3x stall tripwire. Refuse to compare against it;
-      // a map with no stamp (pre-r12 format) is adopted as before.
-      val committedRegime =
-        """"regime_ratio":([0-9]+\.[0-9]+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toDouble)
-      if (!committedSf.exists(s => canon(s) == canon(sfDir))) Map.empty
-      else if (committedRegime.exists(_ > 1.1)) {
-        System.err.println("bench: committed map's regime_ratio " +
-          s"${committedRegime.get} is outside the idle band (>1.1) — " +
-          "ignoring it as a vs_committed baseline; re-land an idle sweep")
-        Map.empty
-      }
-      else """"([a-z0-9_]+)\\?":([0-9]+\.[0-9]+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter { case (k, _) => SparkEntry.queries.contains(k) }.toMap
-    } catch { case _: Throwable => Map.empty }
+    val committed: Map[String, Double] = try committedBaseline(
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(committedPath)), "UTF-8"), sfDir, cpus)
+    catch { case _: Throwable => Map.empty }
     val measured = results.collect { case (n, dt, Some(m)) => (n, dt, m) }
     val topCost = measured.sortBy(-_._2).take(5)
     val topRatio = measured
@@ -344,7 +369,7 @@ object Bench {
     val regimeTag =
       regimeRatio.map(r => s""","regime_ratio":${r3(r)}""").getOrElse("")
     def line(queryMap: String, metricsTail: String): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$queryMap,"errors":$errs,"sf":"$sfDir"$regimeTag$metricsTail}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$queryMap,"errors":$errs,"sf":"$sfDir","cpus":"$cpus"$regimeTag$metricsTail}"""
     val full = line(qs, s""","exec_metrics":$ms,"recheck":$rechecks""")
     // Evidence durability (r10 lesson: the driver sweep's artifact was
     // overwritten by a later subset run and the round's perf

@@ -187,11 +187,16 @@ object Engine {
     * the expression fails LOUDLY instead — the documented retune is
     * the two-column key. The check is two shifts per row (arithmetic
     * shift maps negatives to -1, so it also rejects them), noise
-    * next to the shuffle the narrow key exists to shrink.
+    * next to the shuffle the narrow key exists to shrink. Both inputs
+    * are cast to long first: on an int column Spark masks the shift
+    * count to 5 bits, so `shiftleft(hi, 32)` would be a no-op and the
+    * `lo` guard would reject every non-zero value.
     */
-  private[graft] def packPair(hi: org.apache.spark.sql.Column,
-      lo: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private[graft] def packPair(hiIn: org.apache.spark.sql.Column,
+      loIn: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
+    val hi = hiIn.cast("long")
+    val lo = loIn.cast("long")
     when(shiftright(hi, 31) === 0 && shiftright(lo, 32) === 0,
       shiftleft(hi, 32) + lo)
       .otherwise(raise_error(lit(

@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the test-data star schema. All operators go
   * through these so filters/projections stay declarative and reach
@@ -11,8 +16,60 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Qualified table path -> (cache key, schema inferred under it). */
+  private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
+
+  /** Read one table, inferring its parquet schema only once.
+    *
+    * `spark.read.parquet` starts a Spark job on every call just to
+    * re-read a footer whose schema an earlier query already read. The
+    * first load of a table infers the schema as before and caches the
+    * `StructType`; every later load reads with
+    * `spark.read.schema(cached)`, which starts no job.
+    *
+    * Cache contract:
+    *  - key: the qualified path, plus the [[fingerprint]] layout stamp
+    *    (file count, bytes, max mtime; one driver-side listing), plus
+    *    every set `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+    *    conf, because those change what inference returns ([[events]]
+    *    sets `nanosAsLong`). The key holds everything inference reads,
+    *    so sessions in one JVM share the cache safely;
+    *  - one entry per path: a key mismatch infers again and replaces
+    *    that path's entry, so the cache is bounded by the table count;
+    *  - not a [[FrameMemo]]: it holds no blocks, so `clearAllMemos`
+    *    leaves it alone, as it leaves Spark's codegen cache;
+    *  - a missing path falls through to `spark.read.parquet`, so the
+    *    caller sees Spark's own `PATH_NOT_FOUND` `AnalysisException`.
+    *
+    * Like the memo keys, the stamp is layout-level: an in-place
+    * rewrite with the same file count, bytes and mtime keeps the old
+    * schema.
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = s"$sfDir/$name.parquet"
+    val path = new Path(p)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listing =
+      try Some(fs.listStatus(path))
+      catch { case _: FileNotFoundException => None }
+    listing match {
+      case None => spark.read.parquet(p)
+      case Some(files) =>
+        val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted
+        val key = stamp(files) + "|" + confs.mkString(",")
+        val qualified = fs.makeQualified(path).toString
+        Option(schemas.get(qualified)) match {
+          case Some((k, schema)) if k == key => spark.read.schema(schema).parquet(p)
+          case _ =>
+            val df = spark.read.parquet(p)
+            schemas.put(qualified, (key, df.schema))
+            df
+        }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -66,9 +123,13 @@ object Tables {
     * contract.
     */
   def fingerprint(s: SparkSession, d: String, name: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(path).filter(_.isFile)
+    val path = new Path(s"$d/$name.parquet")
+    stamp(path.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(path))
+  }
+
+  /** count:bytes:max-mtime over the regular files of one listing. */
+  private def stamp(listing: Array[FileStatus]): String = {
+    val files = listing.filter(_.isFile)
     s"${files.length}:${files.map(_.getLen).sum}:" +
       s"${if (files.isEmpty) 0L else files.map(_.getModificationTime).max}"
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions.call_function
 
@@ -74,12 +75,19 @@ package object functions {
         es(0), es(1))),
   )
 
-  /** Register all graft functions in the session (idempotent). */
-  def registerAll(spark: SparkSession): Unit =
+  /** Register every graft function the session does not already
+    * hold. Idempotent: a name whose registry entry is already graft's
+    * own builder (injected by [[graft.plans.GraftExtensions]] or
+    * registered by an earlier call) is skipped, so repeated calls
+    * replace nothing and Spark logs no "function replaced" WARN.
+    */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq b))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
     }
+  }
 
   def cosine_sim(a: Column, b: Column)(implicit spark: SparkSession): Column =
     { registerAll(spark); call_function("cosine_sim", a, b) }

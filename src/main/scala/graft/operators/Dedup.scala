@@ -713,14 +713,18 @@ object Dedup {
     * restores the fail-loud contract for callers that would rather
     * abort than change algorithm mid-query.
     *
-    * Each round's label frame is `ckpt`ed (eager): a
-    * plain persist would NOT truncate the logical plan, and with the
-    * previous frame referenced twice per round the un-truncated plan
-    * DOUBLES in size every iteration — exponential analysis cost and
-    * a driver OOM near 30 rounds (measured). Checkpointing pins the
-    * materialized rows (two longs per node) and resets lineage to a
-    * leaf; blocks of dropped rounds are freed by Spark's
-    * ContextCleaner once unreferenced.
+    * Each round's label frame is `ckpt`ed: a plain persist would NOT
+    * truncate the logical plan, and with the previous frame
+    * referenced twice per round the un-truncated plan DOUBLES in size
+    * every iteration — exponential analysis cost and a driver OOM
+    * near 30 rounds (measured). Checkpointing pins the materialized
+    * rows (two longs per node) and resets lineage to a leaf; the
+    * round's label-sum digest is the job that materializes it, and
+    * blocks of dropped rounds are freed by Spark's ContextCleaner once
+    * unreferenced. The initial labels frame is NOT checkpointed: it
+    * is a projection of `nodes`, with no lineage to truncate, and one
+    * aggregate over it yields both the node count and the first label
+    * sum, so the loop starts with a single job.
     *
     * @param nodes single column `id`
     * @param edges columns `src`, `dst` (undirected; any orientation)
@@ -734,22 +738,26 @@ object Dedup {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var labels = nodes.select(col("id"), col("id").as("label"))
-      .ckpt(true)
     // fixpoint test: per-node labels are monotonically non-increasing
     // (min over self ∪ neighbors), so the label SUM strictly decreases
-    // iff any label changed — one partial-agg'd scan of the
-    // checkpointed frame, no comparison join. Decimal(38,0) keeps the
-    // sum exact at any node count (1e11 ids of ~1e11 overflow a long).
-    // sum() over zero rows is SQL NULL — map it to 0 so an empty nodes
-    // frame converges to an empty result instead of NPE-ing
-    def labelSum(df: DataFrame): BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)")).as("s"))
-        .collect()(0).getDecimal(0)).map(BigDecimal(_)).getOrElse(BigDecimal(0))
-    var prevSum = labelSum(labels)
-    // node-sized round-invariant label state — the r16 scale-adaptive
-    // broadcast ([[graft.Engine.hintSmall]]): the symmetrized edge
-    // frame then never re-shuffles per round
-    val nNodes = labels.count()
+    // iff any label changed — one partial-agg'd scan of the round's
+    // frame, no comparison join. Decimal(38,0) keeps the sum exact at
+    // any node count (1e11 ids of ~1e11 overflow a long). sum() over
+    // zero rows is SQL NULL — map it to 0 so an empty nodes frame
+    // converges to an empty result instead of NPE-ing
+    val labelSumCol = sum(col("label").cast("decimal(38,0)"))
+    def sumOf(r: org.apache.spark.sql.Row, i: Int): BigDecimal =
+      Option(r.getDecimal(i)).map(BigDecimal(_)).getOrElse(BigDecimal(0))
+    // the loop's one driver-side read site: a 1-row aggregate
+    def aggRow(df: DataFrame, c: Column*): org.apache.spark.sql.Row =
+      df.agg(c.head, c.tail: _*).collect()(0)
+    // node count (for the r16 scale-adaptive broadcast of the
+    // node-sized round-invariant label state, [[graft.Engine.hintSmall]]:
+    // the symmetrized edge frame then never re-shuffles per round) and
+    // the first label sum, in one job
+    val start = aggRow(labels, count(lit(1)), labelSumCol)
+    val nNodes = start.getLong(0)
+    var prevSum = sumOf(start, 1)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
@@ -758,8 +766,8 @@ object Dedup {
         .select(col("src").as("id"), col("label"))
       val next = labels.select(col("id"), col("label")).union(viaEdges)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .ckpt(false) // lazy: labelSum materializes it (one job, not two)
-      val nextSum = labelSum(next)
+        .ckpt(false) // lazy: the sum digest materializes it (one job, not two)
+      val nextSum = sumOf(aggRow(next, labelSumCol), 0)
       labels = next
       converged = nextSum == prevSum
       prevSum = nextSum

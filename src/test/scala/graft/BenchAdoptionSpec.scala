@@ -66,3 +66,35 @@ class BenchLineSpec extends AnyFunSuite {
     assert(lines.head.contains("\"q225_some_query_name\":22.500"))
   }
 }
+
+/** Pins for [[Bench.committedBaseline]]: a committed map is a
+  * vs_committed baseline only for a run at the same SF on the same
+  * core count, recorded at an idle regime stamp.
+  */
+class BenchBaselineSpec extends AnyFunSuite {
+  private val sf = "/data/sf0.1"
+  private def artifact(fields: String): String =
+    s"""{"metric":"total","value":1.500,"queries":{"q01_pricing_summary":1.250,""" +
+      s""""not_a_key":0.250},"errors":[],"sf":"$sf"$fields}"""
+
+  test("a same-SF same-cpus map is adopted, known keys only") {
+    assert(Bench.committedBaseline(artifact(""","cpus":"8""""), sf, "8") ==
+      Map("q01_pricing_summary" -> 1.25))
+    assert(Bench.committedBaseline(artifact(""","cpus":"8""""), sf + "/", "8")
+      .nonEmpty, "sf paths compare normalized")
+  }
+
+  test("a map from another core count, or with none recorded, is refused") {
+    assert(Bench.committedBaseline(artifact(""","cpus":"8""""), sf, "32").isEmpty)
+    assert(Bench.committedBaseline(artifact(""), sf, "32").isEmpty)
+  }
+
+  test("the SF and regime guards still refuse") {
+    assert(Bench.committedBaseline(artifact(""","cpus":"8""""), "/data/sf1", "8")
+      .isEmpty)
+    assert(Bench.committedBaseline(
+      artifact(""","cpus":"8","regime_ratio":1.300"""), sf, "8").isEmpty)
+    assert(Bench.committedBaseline(
+      artifact(""","cpus":"8","regime_ratio":0.990"""), sf, "8").nonEmpty)
+  }
+}

@@ -45,6 +45,55 @@ class EngineSpec extends AnyFunSuite {
     intercept[Exception](packs(-1L, 0L))
   }
 
+  test("packPair casts int inputs to long: packs at the int bound, fails past it") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.IntegerType
+    def pack(hi: Int, lo: Int): Long = {
+      val df = Seq((hi, lo)).toDF("hi", "lo")
+      assert(df.schema("hi").dataType == IntegerType)
+      df.select(Engine.packPair(col("hi"), col("lo"))).head().getLong(0)
+    }
+    // without the casts an int shift by 32 is a no-op: the key would
+    // be hi + lo, and any non-zero lo would trip the guard
+    assert(pack(Int.MaxValue, Int.MaxValue) ==
+      (Int.MaxValue.toLong << 32) + Int.MaxValue)
+    assert(pack(0, 1) == 1L)
+    assert(pack(1, 0) == 1L << 32)
+    intercept[Exception](pack(-1, 0))
+    intercept[Exception](pack(0, -1))
+  }
+
+  test("registerAll replaces nothing and fills a session built without GraftExtensions") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val ids = graft.functions.builders.map { case (n, _) => FunctionIdentifier(n) }
+    // a replacement registers a new ExpressionInfo, so an unchanged
+    // info per name shows the call replaced nothing
+    def replacesNothing(s: org.apache.spark.sql.SparkSession): Unit = {
+      val registry = s.sessionState.functionRegistry
+      val before = ids.map(registry.lookupFunction(_).get)
+      graft.functions.registerAll(s)
+      ids.zip(before).foreach { case (id, info) =>
+        assert(registry.lookupFunction(id).get eq info, id.funcName) }
+    }
+    replacesNothing(TestSpark.spark) // the injected entries survive
+    // a session on the same context that applies no extensions; the
+    // constructor taking them is private, so reach it reflectively
+    val bare = classOf[org.apache.spark.sql.classic.SparkSession].getConstructors
+      .find(_.getParameterCount == 6).get
+      .newInstance(TestSpark.spark.sparkContext, Some(TestSpark.spark.sharedState),
+        None, new org.apache.spark.sql.SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[org.apache.spark.sql.SparkSession]
+    val registry = bare.sessionState.functionRegistry
+    assert(!ids.exists(registry.functionExists), "the bare session has no graft function")
+    graft.functions.registerAll(bare)
+    assert(ids.forall(registry.functionExists))
+    replacesNothing(bare)
+    assert(bare.sql("SELECT l2_sq(array(1.0F, 2.0F), array(1.0F, 0.0F))")
+      .head().getDouble(0) == 4.0)
+  }
+
   test("dirBytes sums regular files recursively, 0 for missing dirs") {
     val d = java.nio.file.Files.createTempDirectory("graft-dirbytes")
     java.nio.file.Files.write(d.resolve("a.bin"), new Array[Byte](1000))

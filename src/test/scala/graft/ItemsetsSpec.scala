@@ -163,6 +163,24 @@ class ItemsetsSpec extends AnyFunSuite {
       }.toSeq)
   }
 
+  test("f05 fails loudly past the 16-bit id bound even at depth 1") {
+    // 600 baskets (so sigma = 1) of 60 distinct brands each: 36 000
+    // frequent items, past MaxDictId = 32 767. Depth 1 builds no
+    // extension level, so only a guard on the dictionary catches it.
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-f05-bound").toString
+    val n = 36000
+    (0 until n).map(i => (i / 60 + 1, i)).toDF("l_orderkey", "l_partkey")
+      .write.parquet(s"$d/lineitem.parquet")
+    (0 until n).map(i => (i, f"B$i%05d")).toDF("p_partkey", "p_brand")
+      .write.parquet(s"$d/part.parquet")
+    val e = intercept[Exception](Itemsets.itemsetsToDepth(spark, d, 1).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("frequent vocabulary exceeds 32767")),
+      s"unexpected failure: $e")
+  }
+
   test("f04 sequential patterns equal brute-force subsequence truth") {
     // in-test truth: per-user type sequences ordered by (ts, event_id),
     // pattern support = users whose sequence CONTAINS the subsequence
